@@ -106,7 +106,8 @@ object CoreAnalogs {
     // T1 — enrichment count (operators S1/S5/J1; `codes/task1.py:40-78`).
     Q("t1_enrich_count",
       (s, d) => enrichedOrders(s, d).agg(count(lit(1)).as("cnt")),
-      Some(s"""$enrichedSql SELECT count(*) AS cnt FROM enriched""")),
+      Some(s"""$enrichedSql SELECT count(*) AS cnt FROM enriched"""),
+      core = true),
 
     // T1 — enriched sample incl. the epoch→"yyyy-MM-dd" conversion analog
     // (operator F1; `codes/task1.py:69`) and the post-join projection.
@@ -120,7 +121,8 @@ object CoreAnalogs {
         |SELECT o_orderkey, o_orderstatus, o_totalprice,
         |       strftime(o_orderdate, '%Y-%m-%d') AS order_date,
         |       customer_name, nation
-        |FROM enriched ORDER BY o_orderkey LIMIT 100""".stripMargin)),
+        |FROM enriched ORDER BY o_orderkey LIMIT 100""".stripMargin),
+      core = true),
 
     // T2a — counts per (category, month) (operators A1/F2; `codes/task2.py:77-80`).
     Q("t2a_trip_count",
@@ -133,7 +135,8 @@ object CoreAnalogs {
       Some("""SELECT o_orderpriority AS priority,
         |       CAST(month(o_orderdate) AS INT) AS month,
         |       count(*) AS trip_count
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      core = true),
 
     // T2b — formatted sums per (category, month) (operators A2/F5/F6;
     // `codes/task2.py:86-93`): format_number with thousands separators.
@@ -149,7 +152,8 @@ object CoreAnalogs {
       Some(s"""SELECT o_orderpriority AS priority,
         |       CAST(month(o_orderdate) AS INT) AS month,
         |       ${duckFmt2("sum(o_totalprice)")} AS total_profit
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      core = true),
 
     // T2c — same over the bigger fact (`codes/task2.py:96-103` analog).
     Q("t2c_total_earnings",
@@ -164,7 +168,8 @@ object CoreAnalogs {
       Some(s"""SELECT l_returnflag AS flag,
         |       CAST(month(l_shipdate) AS INT) AS month,
         |       ${duckFmt2("sum(l_extendedprice)")} AS total_earnings
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      core = true),
 
     // T3a — top-5 per month by dense_rank, ties kept (operators WF1/W5;
     // `codes/task3.py:74-89`). Customer-nation counts per order month.
@@ -189,7 +194,8 @@ object CoreAnalogs {
         |  FROM counts
         |)
         |SELECT nation, month, trip_count FROM ranked WHERE rnk <= 5
-        |ORDER BY month, trip_count DESC, nation""".stripMargin)),
+        |ORDER BY month, trip_count DESC, nation""".stripMargin),
+      core = true),
 
     // T3b — dropoff-side variant: supplier nations per ship month
     // (`codes/task3.py:92-102` analog).
@@ -224,7 +230,8 @@ object CoreAnalogs {
         |  FROM counts
         |)
         |SELECT nation, month, trip_count FROM ranked WHERE rnk <= 5
-        |ORDER BY month, trip_count DESC, nation""".stripMargin)),
+        |ORDER BY month, trip_count DESC, nation""".stripMargin),
+      core = true),
 
     // T3c — top-30 routes by summed measure (operators F4/A2/O1;
     // `codes/task3.py:106-115`). Deterministic tie-break on route.
@@ -237,7 +244,8 @@ object CoreAnalogs {
       Some(s"""$routeSql
         |SELECT route, round(sum(l_extendedprice), 2) AS total_profit
         |FROM rl GROUP BY route
-        |ORDER BY total_profit DESC, route LIMIT 30""".stripMargin)),
+        |ORDER BY total_profit DESC, route LIMIT 30""".stripMargin),
+      core = true),
 
     // T4a — avg per category, desc (operator A3; `codes/task4.py:74-76`).
     Q("t4a_avg_price_by_priority",
@@ -247,7 +255,8 @@ object CoreAnalogs {
         .orderBy(col("average_price").desc, col("priority")),
       Some("""SELECT o_orderpriority AS priority,
         |       round(avg(o_totalprice), 6) AS average_price
-        |FROM orders GROUP BY 1 ORDER BY 2 DESC, 1""".stripMargin)),
+        |FROM orders GROUP BY 1 ORDER BY 2 DESC, 1""".stripMargin),
+      core = true),
 
     // T4b — second avg (`codes/task4.py:80-82`).
     Q("t4b_avg_qty_by_flag",
@@ -257,7 +266,8 @@ object CoreAnalogs {
         .orderBy(col("average_qty").desc, col("flag")),
       Some("""SELECT l_returnflag AS flag,
         |       round(avg(l_quantity), 6) AS average_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 2 DESC, 1""".stripMargin)),
+        |FROM lineitem GROUP BY 1 ORDER BY 2 DESC, 1""".stripMargin),
+      core = true),
 
     // T4c — the two aggregates joined on the shared key + ratio
     // (operators J2/F8; `codes/task4.py:86-95`). Post-agg sides are tiny
@@ -282,7 +292,8 @@ object CoreAnalogs {
         |  FROM lineitem GROUP BY 1
         |)
         |SELECT a.flag AS flag, round(avg_price / avg_qty, 6) AS price_per_unit
-        |FROM a JOIN b ON a.flag = b.flag ORDER BY 1""".stripMargin)),
+        |FROM a JOIN b ON a.flag = b.flag ORDER BY 1""".stripMargin),
+      core = true),
 
     // T5a — month slice + per-day averages, asc (operators W4/F3/A3;
     // `codes/task5.py:71-80`). The month filter sits below the aggregate.
@@ -296,7 +307,8 @@ object CoreAnalogs {
       Some("""SELECT CAST(dayofmonth(ts) AS INT) AS day,
         |       round(avg(value), 6) AS average_value
         |FROM events WHERE month(ts) = 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      core = true),
 
     // T5b — threshold filter on the aggregate, kept fully in Spark
     // (the reference crossed to pandas — `codes/task5.py:86-92`).
@@ -312,7 +324,8 @@ object CoreAnalogs {
         .orderBy("day"),
       Some("""SELECT CAST(dayofmonth(ts) AS INT) AS day
         |FROM events WHERE month(ts) = 1
-        |GROUP BY 1 HAVING avg(value) > 54.0 ORDER BY 1""".stripMargin)),
+        |GROUP BY 1 HAVING avg(value) > 54.0 ORDER BY 1""".stripMargin),
+      core = true),
 
     // T6a — post-aggregation HAVING range + multi-key sort (operators
     // W3/O2; `codes/task6.py:71-81`).
@@ -326,7 +339,8 @@ object CoreAnalogs {
         |SELECT nation, o_orderpriority AS priority, count(*) AS trip_count
         |FROM enriched GROUP BY 1, 2
         |HAVING count(*) > 0 AND count(*) < 100
-        |ORDER BY 1, 2""".stripMargin)),
+        |ORDER BY 1, 2""".stripMargin),
+      core = true),
 
     // T6b — equality filter + re-attached literal column (operators
     // W1/F7; `codes/task6.py:84-90`).
@@ -341,7 +355,8 @@ object CoreAnalogs {
       Some(s"""$enrichedSql
         |SELECT nation, '1-URGENT' AS priority, count(*) AS trip_count
         |FROM enriched WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      core = true),
 
     // T6c — conjunctive filter: count (operators W2/S5; `codes/task6.py:96-106`).
     Q("t6c_filtered_count",
@@ -350,7 +365,8 @@ object CoreAnalogs {
         .agg(count(lit(1)).as("cnt")),
       Some(s"""$enrichedSql
         |SELECT count(*) AS cnt FROM enriched
-        |WHERE nation = 'NATION_3' AND o_orderstatus = 'F'""".stripMargin)),
+        |WHERE nation = 'NATION_3' AND o_orderstatus = 'F'""".stripMargin),
+      core = true),
 
     // T6c — the 10-row sample of the same slice (operators P3/O3;
     // `codes/task6.py:110-118`), keyed for determinism.
@@ -363,7 +379,8 @@ object CoreAnalogs {
         |SELECT o_orderkey, nation, o_orderstatus, customer_name
         |FROM enriched
         |WHERE nation = 'NATION_3' AND o_orderstatus = 'F'
-        |ORDER BY o_orderkey LIMIT 10""".stripMargin)),
+        |ORDER BY o_orderkey LIMIT 10""".stripMargin),
+      core = true),
 
     // T7 — pivot with explicit values (skips PySpark's eager distinct
     // job), fillna(0), derived total, top-10 (operators A4/A5/P1/O1;
@@ -385,7 +402,8 @@ object CoreAnalogs {
         |       count(*) FILTER (WHERE l_linestatus = 'F') AS f_count,
         |       count(*) AS total_count
         |FROM rl GROUP BY route
-        |ORDER BY total_count DESC, route LIMIT 10""".stripMargin)),
+        |ORDER BY total_count DESC, route LIMIT 10""".stripMargin),
+      core = true),
 
     // Events — hourly tumbling-window aggregate, the batch twin of the
     // Structured Streaming pipeline in graft.streaming (watermark+window);
@@ -401,7 +419,8 @@ object CoreAnalogs {
         .orderBy("hour", "event_type"),
       Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
         |       event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      core = true),
 
     // Semi/anti join shapes (free from Spark; beyond the reference's
     // J1/J2 surface): customers with vs without orders, one row each.
@@ -420,7 +439,8 @@ object CoreAnalogs {
         |UNION ALL
         |SELECT 'without_orders', count(*) FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY kind""".stripMargin)),
+        |ORDER BY kind""".stripMargin),
+      core = true),
 
     // Multi-level aggregation via ROLLUP (nation → grand total); null
     // grouping keys labeled so both engines order identically.
@@ -440,7 +460,8 @@ object CoreAnalogs {
         |       GROUPING(nation, o_orderpriority) AS level,
         |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
         |FROM enriched GROUP BY ROLLUP (nation, o_orderpriority)
-        |ORDER BY 1, 2, 3""".stripMargin)),
+        |ORDER BY 1, 2, 3""".stripMargin),
+      core = true),
 
     // Distinct aggregation (absent from the reference): unique ordering
     // customers and priorities per order month.
@@ -453,7 +474,8 @@ object CoreAnalogs {
       Some("""SELECT CAST(month(o_orderdate) AS INT) AS month,
         |       count(DISTINCT o_custkey) AS n_customers,
         |       count(DISTINCT o_orderpriority) AS n_priorities
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+      core = true),
 
     // Table profiling: one aggregation pass over every column of
     // orders (counts, distincts, numeric min/max), unpivoted by stack.
@@ -716,7 +738,8 @@ object CoreAnalogs {
         |  round(avg(total) OVER (ORDER BY day
         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS ma7,
         |  round(total - lag(total, 1) OVER (ORDER BY day), 6) AS delta
-        |FROM daily ORDER BY day""".stripMargin)),
+        |FROM daily ORDER BY day""".stripMargin),
+      core = true),
 
     // Events — semi-structured source: typed JSON extraction from the
     // props column (from_json with an explicit schema parses once;
@@ -736,7 +759,8 @@ object CoreAnalogs {
         |       count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n,
         |       round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k,
         |       max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+      core = true),
 
     // Events — sessionization: per-user session count with a 30-minute
     // inactivity gap, via lag + cumulative conditional sum. Exact integer
@@ -766,7 +790,8 @@ object CoreAnalogs {
         |  FROM events
         |)
         |SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
+      core = true),
 
     // Visualization manifest — the deterministic artifact behind the
     // reference's T2/T5 notebooks (`codes/task2_vis.ipynb`,

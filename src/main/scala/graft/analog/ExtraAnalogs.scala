@@ -2,7 +2,7 @@ package graft.analog
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Tier}
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup, Evaluation, Multimodal, Similarity}
 import graft.sources.Tables
@@ -1336,7 +1336,8 @@ object ExtraAnalogs {
         |  JOIN sh sa ON sa.doc_id = c.new_id
         |  JOIN sh sb ON sb.doc_id = c.old_id
         |) WHERE jaccard >= 0.5 ORDER BY new_id, old_id""".stripMargin
-      }),
+      },
+      tier = Tier.StoredWide),
 
     // Dedup completion: near-dup pairs → connected components → one
     // canonical survivor (min doc_id) per cluster, for every doc.
@@ -1592,7 +1593,8 @@ object ExtraAnalogs {
         |         AS recall_pm,
         |       CAST(CASE WHEN n_truth > 0 THEN 10000 ELSE 0 END AS BIGINT)
         |         AS precision_pm
-        |FROM nt""".stripMargin)),
+        |FROM nt""".stripMargin),
+      tier = Tier.Once),
 
     // Winnowing: truth = the UNCAPPED shared-fingerprint pairs (the
     // miner's own measure with the df ≤ 128 hot-fingerprint guard
@@ -1646,7 +1648,8 @@ object ExtraAnalogs {
         |       CASE WHEN n_found > 0
         |            THEN CAST(n_matched * 10000 // n_found AS BIGINT)
         |            ELSE 0 END AS precision_pm
-        |FROM nt, nf, nm""".stripMargin)),
+        |FROM nt, nf, nm""".stripMargin),
+      tier = Tier.Once),
 
     // Containment: truth = EXACT shingle containment ≥ 8000 pm over
     // the slice × corpus brute pair set — the miner's verify measure
@@ -1718,7 +1721,8 @@ object ExtraAnalogs {
         |       CASE WHEN n_found > 0
         |            THEN CAST(n_matched * 10000 // n_found AS BIGINT)
         |            ELSE 0 END AS precision_pm
-        |FROM nt, nf, nm""".stripMargin)),
+        |FROM nt, nf, nm""".stripMargin),
+      tier = Tier.Once),
 
     // Exact-substring duplicate pairs (Lee et al. 2021): maximal shared
     // EXACT token runs >= 12 words, found via positional 8-gram anchor
@@ -2272,7 +2276,8 @@ object ExtraAnalogs {
       },
       Some(s"""WITH $dBm25Cte
         |SELECT query_id, doc_id, h, CAST(c AS BIGINT) AS c
-        |FROM hits ORDER BY query_id, doc_id, h""".stripMargin)),
+        |FROM hits ORDER BY query_id, doc_id, h""".stripMargin),
+      tier = Tier.Stored),
 
     // Cluster-balanced diversity sample: the trained IVF cells capped
     // at 40 members each by md5 rank — the topic-balancing selection
@@ -2343,7 +2348,8 @@ object ExtraAnalogs {
           s"$dir/cells", Similarity.ivf2Cells(e, l1, l2, 4))
         Similarity.ivf2TopKFromIndex(idx, e, l1, l2, 4)
       },
-      Some(dIvf2Oracle)),
+      Some(dIvf2Oracle),
+      tier = Tier.Stored),
 
     // Incremental index maintenance (round 15): the %20 arrival slice
     // UPSERTS into the stored two-level index — both router levels
@@ -2428,7 +2434,8 @@ object ExtraAnalogs {
         |  (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
         |  FROM p)
         |SELECT query_id, neighbor_id, sim, CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Stored),
 
     // Recall gate for the hierarchical router (the eval_ivfpq_metrics
     // precedent): per-query hits/recall/MRR/nDCG of the two-level
@@ -2474,7 +2481,8 @@ object ExtraAnalogs {
         |  SELECT query_id, neighbor_id, row_number() OVER
         |    (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
         |  FROM ap),
-        |${dMetricsTail("lr")}""".stripMargin)),
+        |${dMetricsTail("lr")}""".stripMargin),
+      tier = Tier.Once),
 
     // Product-quantization corpus encoding: per-subspace integer-L2
     // k-means codebook (4 subspaces x 8 centroids, trained like the
@@ -2521,7 +2529,8 @@ object ExtraAnalogs {
         |  FROM adc
         |)
         |SELECT query_id, neighbor_id, adc, CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Once),
 
     // IVF-PQ top-3 — the composed billion-scale ANN shape (FAISS
     // IVFx,PQy): corpus rows live in their IVF cell's inverted list
@@ -2637,7 +2646,8 @@ object ExtraAnalogs {
         |  FROM rfrr
         |)
         |SELECT query_id, neighbor_id, sim, CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Once),
 
     // The refine stage's recall gate: two-stage IVF-PQ top-10 (ADC
     // shortlist at kCand=30, exact rerank) vs brute-force truth
@@ -2685,7 +2695,8 @@ object ExtraAnalogs {
         |    (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
         |  FROM rfrr
         |),
-        |${dMetricsTail("rfr")}""".stripMargin)),
+        |${dMetricsTail("rfr")}""".stripMargin),
+      tier = Tier.Once),
 
     // The OPERATING-POINT sweep the refine gate was missing (round-15
     // verdict ask #4): one trained geometry (nCells=8 router + PQ
@@ -2704,7 +2715,8 @@ object ExtraAnalogs {
     // (trains + brute-forces per run by design).
     Q("eval_ivfpq_refined_sweep",
       (s, d) => Similarity.ivfPqRefinedSweep(Tables.embeddings(s, d)),
-      Some(dIvfPqSweepOracle)),
+      Some(dIvfPqSweepOracle),
+      tier = Tier.Once),
 
     // IVF-PQ artifact persistence in the loop: train the router
     // centroids AND the PQ codebook, SAVE both (ModelStore.saveIvf +
@@ -2749,7 +2761,8 @@ object ExtraAnalogs {
         |  FROM adc
         |)
         |SELECT query_id, neighbor_id, adc, CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM r WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Once),
 
     // HYBRID retrieval: reciprocal-rank fusion (Cormack et al., SIGIR
     // 2009) of two metric-incompatible ANN backends — the cosine IVF
@@ -2773,7 +2786,8 @@ object ExtraAnalogs {
           Similarity.ivfTopKWith(e, ivfM, 50, 10, nprobe = 2),
           Similarity.pqTopK(e, pqM, 50, 10)), k = 3)
       },
-      Some(dRrfOracle)),
+      Some(dRrfOracle),
+      tier = Tier.Once),
 
     // The DEPLOYMENT twin of sim_rrf_topk: both backends score from
     // the ModelStore-loaded artifact pair (ensureIvfPq — trained and
@@ -2800,7 +2814,8 @@ object ExtraAnalogs {
           Similarity.ivfTopKFromIndex(cellsIdx, e, ivf, 50, 10, nprobe = 2),
           Similarity.pqTopKFromCodes(codesIdx, e, pq, 50, 10)), k = 3)
       },
-      Some(dRrfOracle)),
+      Some(dRrfOracle),
+      tier = Tier.Stored),
 
 
     // MMR diversified rerank (Carbonell & Goldstein 1998): top-8
@@ -2916,7 +2931,8 @@ object ExtraAnalogs {
         |    AS rnk
         |  FROM neg)
         |SELECT query_id, neighbor_id, score, CAST(rnk AS BIGINT) AS rank
-        |FROM nr WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM nr WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Stored),
 
     // LEXICAL + DENSE hybrid retrieval — the flagship hybrid-search
     // shape (BM25 over the text, exact cosine over the aligned
@@ -2977,7 +2993,8 @@ object ExtraAnalogs {
         |    (PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) AS rnk
         |  FROM fused)
         |SELECT query_id, neighbor_id, rrf, CAST(rnk AS BIGINT) AS rank
-        |FROM fr WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM fr WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Stored),
 
     // SemDeDup: k-means the embedding space (the same deterministic
     // 2-round integer-scaled Lloyd as sim_ivf_topk but with k sized
@@ -3076,7 +3093,8 @@ object ExtraAnalogs {
         |)
         |SELECT query_id, neighbor_id, CAST(qscore AS BIGINT) AS qscore,
         |       CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin)),
+        |FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin),
+      tier = Tier.Stored),
 
     // The recall gate for the SQ8 path (the eval_ivfpq_metrics grader
     // pointed at the scalar-quantized ranker): SQ8 top-10 for the 50-
@@ -3244,7 +3262,8 @@ object ExtraAnalogs {
       Some(s"""WITH $dLangidNbCte
         |SELECT doc_id, true_lang AS lang, lang AS pred_lang,
         |  CAST(score AS BIGINT) AS score
-        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
+        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin),
+      tier = Tier.Once),
 
     // Per-class precision/recall/F1 of the trained language-ID — the
     // measurement leg of the model-in-the-loop story (Evaluation
@@ -3277,7 +3296,8 @@ object ExtraAnalogs {
       Some(s"""WITH $dLangidNbCte
         |SELECT doc_id, true_lang AS lang, lang AS pred_lang,
         |  CAST(score AS BIGINT) AS score
-        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
+        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin),
+      tier = Tier.Once),
 
     Q("eval_langid_prf",
       (s, d) => graft.operators.Evaluation.classPrf(
@@ -3307,7 +3327,8 @@ object ExtraAnalogs {
         |  CAST(CASE WHEN 2*tp + fp + fn > 0
         |    THEN 2 * tp * 10000 // (2*tp + fp + fn) ELSE 0 END
         |    AS BIGINT) AS f1_pm
-        |FROM j ORDER BY cls""".stripMargin)),
+        |FROM j ORDER BY cls""".stripMargin),
+      tier = Tier.Once),
 
     // Deployment-shaped evaluation: the SAME P/R/F1 metric computed
     // from the LOADED NB artifact (ModelStore round-trip) instead of
@@ -3355,7 +3376,8 @@ object ExtraAnalogs {
         |  CAST(CASE WHEN 2*tp + fp + fn > 0
         |    THEN 2 * tp * 10000 // (2*tp + fp + fn) ELSE 0 END
         |    AS BIGINT) AS f1_pm
-        |FROM j ORDER BY cls""".stripMargin)),
+        |FROM j ORDER BY cls""".stripMargin),
+      tier = Tier.Stored),
 
     // The staleness gate for stored artifacts (round-14 verdict ask):
     // ModelStore records the training corpus's fingerprint (row count
@@ -3396,7 +3418,8 @@ object ExtraAnalogs {
         |  FROM seed
         |UNION ALL SELECT 'grown', n + 1, CAST(1 AS BIGINT) FROM seed
         |UNION ALL SELECT 'same', n, CAST(0 AS BIGINT) FROM seed
-        |ORDER BY probe""".stripMargin)),
+        |ORDER BY probe""".stripMargin),
+      tier = Tier.Stored),
 
     // The FULL deployment loop, end-to-end at the gate (round-15
     // verdict ask): train on yesterday's corpus slice → serve loaded →
@@ -3431,7 +3454,8 @@ object ExtraAnalogs {
           "the retrained artifact must be fresh for the grown corpus")
         Similarity.ivf2TopKFromIndex(idx, e, l1, l2, 4)
       },
-      Some(dIvf2Oracle)),
+      Some(dIvf2Oracle),
+      tier = Tier.Once),
 
     // Retrieval ranking metrics — the measurement leg for the ANN
     // rankers: the LSH top-10 graded against the exact brute-force
@@ -3505,7 +3529,8 @@ object ExtraAnalogs {
         |    (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rnk
         |  FROM adc
         |),
-        |${dMetricsTail("ar")}""".stripMargin)),
+        |${dMetricsTail("ar")}""".stripMargin),
+      tier = Tier.Once),
 
     // Per-doc quality metrics + composite score.
     //
@@ -3675,7 +3700,8 @@ object ExtraAnalogs {
         |)
         |SELECT cust_nation AS nation, supp_nation, revenue,
         |       CAST(rnk AS BIGINT) AS rank
-        |FROM r WHERE rnk <= 3 ORDER BY nation, rank""".stripMargin)),
+        |FROM r WHERE rnk <= 3 ORDER BY nation, rank""".stripMargin),
+      core = true),
 
     // Token counting two ways: whitespace tokens and BPE-ish regex
     // pieces (letter runs | digit runs | single other-glyphs).
@@ -4190,7 +4216,8 @@ object ExtraAnalogs {
         |         AS recall_pm,
         |       CAST(CASE WHEN n_truth > 0 THEN 10000 ELSE 0 END AS BIGINT)
         |         AS precision_pm
-        |FROM nt""".stripMargin)),
+        |FROM nt""".stripMargin),
+      tier = Tier.Once),
 
     // Batch twin of the STREAMING image near-dup screen
     // (DocStreams.dhashScreen): every 10th image "arrives" and its

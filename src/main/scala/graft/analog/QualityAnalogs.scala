@@ -3,7 +3,7 @@ package graft.analog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Tier}
 import graft.operators.{Chunking, QualityFilters}
 import graft.sources.Tables
 
@@ -207,7 +207,8 @@ object QualityAnalogs {
         |${ExtraAnalogs.dNbChainOn("qnb")}
         |SELECT doc_id, true_lang AS label, lang AS pred,
         |  CAST(score AS BIGINT) AS score
-        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
+        |FROM rk WHERE rk = 1 ORDER BY doc_id""".stripMargin),
+      tier = Tier.Once),
 
     // Batch twin of the STREAMING model-quality screen
     // (DocStreams.qualityNbScreen): every 10th doc "arrives" and
@@ -234,7 +235,8 @@ object QualityAnalogs {
         |${ExtraAnalogs.dNbChainOn("qnb", "doc_id % 10 = 5")}
         |SELECT doc_id, lang AS verdict, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rk = 1 AND doc_id % 10 = 0
-        |ORDER BY doc_id""".stripMargin)),
+        |ORDER BY doc_id""".stripMargin),
+      tier = Tier.Stored),
 
     // The classifier's agreement gate: per-class P/R/F1 of the NB
     // keep/drop predictions against the rule labels themselves —
@@ -247,7 +249,8 @@ object QualityAnalogs {
           .select(col("lang").as("label"), col("pred_lang").as("pred"))),
       Some(s"""WITH $dQnbCte,
         |${ExtraAnalogs.dNbChainOn("qnb")},
-        |$dPrfTail""".stripMargin)),
+        |$dPrfTail""".stripMargin),
+      tier = Tier.Once),
 
     // The WORD-FEATURE arm of the same gate (round-18 ask #7 — the
     // fastText recipe's second feature family): hashed DISTINCT-word
@@ -270,7 +273,8 @@ object QualityAnalogs {
           .select(col("lang").as("label"), col("pred_lang").as("pred"))),
       Some(s"""WITH $dQnbCte,
         |${ExtraAnalogs.dNbChainOn("qnb", wordFeats = true)},
-        |$dPrfTail""".stripMargin)),
+        |$dPrfTail""".stripMargin),
+      tier = Tier.Once),
 
     // Gopher document-level rules (Rae et al. 2021, table A1 subset
     // that applies to a line-less corpus). Injections: required

@@ -2,7 +2,7 @@ package graft.analog
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Tier}
 import graft.operators.{Decontam, Evaluation, Similarity}
 import graft.sources.Tables
 
@@ -215,7 +215,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM nd2rk WHERE vec_id < 50
         |),
-        |${dMetricsTail("nds2")}""".stripMargin)),
+        |${dMetricsTail("nds2")}""".stripMargin),
+      tier = Tier.Once),
 
     // The round-3 convergence point, THROUGH THE LOOP OPERATOR: the
     // fourth hash-gated point on the neighbor-propagation curve
@@ -247,7 +248,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM nd3rk WHERE vec_id < 50
         |),
-        |${dMetricsTail("nds3")}""".stripMargin)),
+        |${dMetricsTail("nds3")}""".stripMargin),
+      tier = Tier.Once),
 
     // The MINING-SIDE recall arm of the same ladder: the kNN graph
     // built with Hamming-2 probes (probeBuckets2 — ~8× candidates at
@@ -283,7 +285,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM g2r WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsg")}""".stripMargin)),
+        |${dMetricsTail("ndsg")}""".stripMargin),
+      tier = Tier.Once),
 
     // The COMPOSED ladder cell (round-18 ask #3): ONE NN-descent
     // round over the Hamming-2-probed graph — mining's best arm
@@ -323,7 +326,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM ndhrk WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsh")}""".stripMargin)),
+        |${dMetricsTail("ndsh")}""".stripMargin),
+      tier = Tier.Once),
 
     // ── The recall ladder ON CLUSTERED GEOMETRY (see clusteredEmbs):
     // the same three arms (H1 raw graph, one descent round, H2-probed
@@ -357,7 +361,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM gr WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsc")}""".stripMargin)),
+        |${dMetricsTail("ndsc")}""".stripMargin),
+      tier = Tier.Once),
 
     Q("eval_nndescent_clustered_metrics",
       (s, d) => {
@@ -379,7 +384,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM ndrk WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsc")}""".stripMargin)),
+        |${dMetricsTail("ndsc")}""".stripMargin),
+      tier = Tier.Once),
 
     Q("eval_knngraph2_clustered_metrics",
       (s, d) => {
@@ -408,7 +414,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM g2r WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsc")}""".stripMargin)),
+        |${dMetricsTail("ndsc")}""".stripMargin),
+      tier = Tier.Once),
 
     // The composed cell on the CLUSTERED fixture — one descent round
     // over the H2 graph, clustered geometry, same slice/truth/tail:
@@ -444,7 +451,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM ndhrk WHERE vec_id < 50
         |),
-        |${dMetricsTail("ndsh")}""".stripMargin)),
+        |${dMetricsTail("ndsh")}""".stripMargin),
+      tier = Tier.Once),
 
     // Embedding-space contamination flags: eval slice (vec_id%40=0)
     // probes the corpus-sized sign buckets of the train slice, cosine
@@ -666,7 +674,8 @@ object SemanticAnalogs {
         |         '%Y-%m-%d %H:%M:%S') AS hour,
         |       vec_id, label AS pred_label, votes,
         |       support AS support_micro
-        |FROM w WHERE vrk = 1 ORDER BY vec_id""".stripMargin)),
+        |FROM w WHERE vrk = 1 ORDER BY vec_id""".stripMargin),
+      tier = Tier.Stored),
 
     // The kNN GRAPH: every vector's top-5 bucket-mates by cosine —
     // nearDupPairs' geometry with a per-vector rank window instead of
@@ -728,7 +737,8 @@ object SemanticAnalogs {
       Some(s"""WITH $dLshPrefix,
         |${dNnDescent(5)}
         |SELECT vec_id, neighbor_id, sim, CAST(rnk AS BIGINT) AS rank
-        |FROM ndrk WHERE rnk <= 5 ORDER BY vec_id, rank""".stripMargin)),
+        |FROM ndrk WHERE rnk <= 5 ORDER BY vec_id, rank""".stripMargin),
+      tier = Tier.Stored),
 
     // NN-descent TO CONVERGENCE — the loop operator (driver-
     // coordinated rounds, each fully distributed, with the
@@ -749,7 +759,8 @@ object SemanticAnalogs {
       Some(s"""WITH $dLshPrefix,
         |${dNnDescent2(5)}
         |SELECT vec_id, neighbor_id, sim, CAST(rnk AS BIGINT) AS rank
-        |FROM nd2rk WHERE rnk <= 5 ORDER BY vec_id, rank""".stripMargin)),
+        |FROM nd2rk WHERE rnk <= 5 ORDER BY vec_id, rank""".stripMargin),
+      tier = Tier.Once),
 
     // The outlier screen served from the STORED refined graph — the
     // second consumer of the sim_nndescent_loaded artifact (one build,
@@ -797,7 +808,8 @@ object SemanticAnalogs {
         |SELECT a.vec_id, a.score_micro, c.cut_micro,
         |       CAST(CASE WHEN a.score_micro < c.cut_micro THEN 1 ELSE 0 END
         |         AS BIGINT) AS is_outlier
-        |FROM alls a CROSS JOIN cut c ORDER BY a.vec_id""".stripMargin)),
+        |FROM alls a CROSS JOIN cut c ORDER BY a.vec_id""".stripMargin),
+      tier = Tier.Stored),
 
     // The refinement's recall gate: the refined graph's vec_id<50
     // slice vs the exact brute top-10, through the shared integer
@@ -824,7 +836,8 @@ object SemanticAnalogs {
         |  SELECT vec_id AS query_id, neighbor_id, rnk
         |  FROM ndrk WHERE vec_id < 50
         |),
-        |${dMetricsTail("nds")}""".stripMargin)),
+        |${dMetricsTail("nds")}""".stripMargin),
+      tier = Tier.Once),
 
     // One-round label propagation over the kNN graph: neighbors vote
     // (votes DESC, micro-cosine support DESC, label ASC — integer-
@@ -892,7 +905,8 @@ object SemanticAnalogs {
         |)
         |SELECT vec_id, nb_label AS pred_label, votes,
         |       support AS support_micro
-        |FROM w WHERE rk = 1 ORDER BY vec_id""".stripMargin)),
+        |FROM w WHERE rk = 1 ORDER BY vec_id""".stripMargin),
+      tier = Tier.Stored),
 
     // SemDeDup-style GRAPH pruning: the kNN graph's cosine ≥ 0.3
     // edges collapse into connected components (Dedup.clusters'
@@ -1121,7 +1135,8 @@ object SemanticAnalogs {
         |       CASE WHEN n_found > 0
         |            THEN CAST(n_matched * 10000 // n_found AS BIGINT)
         |            ELSE 0 END AS precision_pm
-        |FROM nt, nf, nm""".stripMargin)),
+        |FROM nt, nf, nm""".stripMargin),
+      tier = Tier.Once),
 
     // The Hamming-2 PROBE ARM graded through the same gate: the miner
     // widened to two-bit probe flips (probeBuckets2 — 1 + b + b(b−1)/2
@@ -1175,5 +1190,6 @@ object SemanticAnalogs {
         |       CASE WHEN n_found > 0
         |            THEN CAST(n_matched * 10000 // n_found AS BIGINT)
         |            ELSE 0 END AS precision_pm
-        |FROM nt, nf, nm""".stripMargin)))
+        |FROM nt, nf, nm""".stripMargin),
+      tier = Tier.Once))
 }

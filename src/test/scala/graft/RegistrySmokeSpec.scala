@@ -41,6 +41,23 @@ class RegistrySmokeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("query names are unique") {
+    // SparkEntry.queries is built with toMap: a duplicate name would
+    // silently drop a query from both Bench and Verify
+    val dups = Registry.all.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+  }
+
+  test("every *_loaded query has a stored Bench tier") {
+    // a loaded twin probes a stored artifact: without a stored tier
+    // Bench would time its one-time artifact build
+    val loaded = Registry.all.filter(_.name.endsWith("_loaded"))
+    assert(loaded.nonEmpty)
+    val wrong = loaded.filterNot(_.tier.stored).map(q => q.name -> q.tier)
+    assert(wrong.isEmpty, s"loaded queries without a stored tier: $wrong")
+  }
+
   test("entry smoke: flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
